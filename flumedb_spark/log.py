@@ -470,6 +470,31 @@ class ParquetLog:
         r = rows[0]
         return {"seq": r.seq, "value": self.codec.decode(r.value)}
 
+    def range_df(
+        self,
+        spark: SparkSession,
+        gt: int | None = None,
+        gte: int | None = None,
+        lt: int | None = None,
+        lte: int | None = None,
+    ) -> DataFrame:
+        """The committed ``(seq, value)`` rows within the seq bounds, in
+        NO particular order. View feeds and point reads use this plan
+        directly: a global sort costs a range-partition sample job plus
+        an exchange, and Catalyst keeps it under the folds' aggregates.
+        :meth:`stream_df` adds the order."""
+        seq = F.col("seq")
+        cond = F.lit(True)
+        if gt is not None:
+            cond = cond & (seq > F.lit(int(gt)))
+        if gte is not None:
+            cond = cond & (seq >= F.lit(int(gte)))
+        if lt is not None:
+            cond = cond & (seq < F.lit(int(lt)))
+        if lte is not None:
+            cond = cond & (seq <= F.lit(int(lte)))
+        return self.df(spark).where(cond).select("seq", "value")
+
     def stream_df(
         self,
         spark: SparkSession,
@@ -487,15 +512,7 @@ class ParquetLog:
         `limit` truncates AFTER `reverse` — i.e. top-k from the chosen
         end. Projection flags = column pruning (index.js:96-113).
         """
-        df = self.df(spark)
-        if gt is not None:
-            df = df.where(F.col("seq") > F.lit(int(gt)))
-        if gte is not None:
-            df = df.where(F.col("seq") >= F.lit(int(gte)))
-        if lt is not None:
-            df = df.where(F.col("seq") < F.lit(int(lt)))
-        if lte is not None:
-            df = df.where(F.col("seq") <= F.lit(int(lte)))
+        df = self.range_df(spark, gt=gt, gte=gte, lt=lt, lte=lte)
         df = df.orderBy(F.col("seq").desc() if reverse else F.col("seq").asc())
         if limit is not None:
             df = df.limit(int(limit))

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from .base import FlumeView
 
+KEY_SCHEMA = "key string"
+
 
 class Bloom(FlumeView):
     """``Bloom(version, key_expr, expected_items=1_000_000, fpp=0.01)``.
@@ -34,7 +36,6 @@ class Bloom(FlumeView):
     (e.g. ``get_json_object(value, '$.user') ``) producing the key.
     """
 
-    ORDER_SENSITIVE = False
     METHODS = {"has": "async", "might_have": "async", "approx_count": "async"}
 
     def __init__(
@@ -106,11 +107,14 @@ class Bloom(FlumeView):
             # committed key — sketch_valid stays untouched)
             self.commit(upto)
 
-    def keys_df(self) -> DataFrame:
-        files = [os.path.join(self._data_dir(), f) for f in self._meta.get("files", [])]
+    def keys_df(self, names: list[str] | None = None) -> DataFrame:
+        """Distinct keys of the committed key files (or of ``names``)."""
+        if names is None:
+            names = self._meta.get("files", [])
+        files = [os.path.join(self._data_dir(), f) for f in names]
         if not files:
-            return self.spark.createDataFrame([], "key string")
-        return self.spark.read.parquet(*files).distinct()
+            return self.spark.createDataFrame([], KEY_SCHEMA)
+        return self.spark.read.schema(KEY_SCHEMA).parquet(*files).distinct()
 
     def _positions_expr(self):
         """k bit positions per key: (h1 + i*h2) mod m, hashes JVM-side."""
@@ -131,14 +135,9 @@ class Bloom(FlumeView):
             built_from = list(self._meta.get("files", []))
         # distinct set positions <= n*k — a compact int set; at scale
         # this becomes a treeAggregate of per-partition bitmaps
-        files = [os.path.join(self._data_dir(), f) for f in built_from]
-        src = (
-            self.spark.read.parquet(*files).distinct()
-            if files
-            else self.spark.createDataFrame([], "key string")
-        )
         rows = (
-            src.select(F.explode(self._positions_expr()).alias("pos"))
+            self.keys_df(built_from)
+            .select(F.explode(self._positions_expr()).alias("pos"))
             .distinct()
             .collect()
         )

@@ -36,7 +36,6 @@ class GroupedStats(FlumeView):
     all groups; both gated like any async view method.
     """
 
-    ORDER_SENSITIVE = False  # mergeable partials commute
     METHODS = {"get": "async", "snapshot": "source", "n_groups": "async"}
 
     def __init__(self, version: Any, key_expr: str, field: str = "value", key_type: str = "string"):
@@ -51,11 +50,14 @@ class GroupedStats(FlumeView):
     def _reset_state(self) -> None:
         self._meta["snapshot"] = None
 
+    def _schema(self) -> str:
+        return f"key {self.key_type}, n long, s double, sq double, mn double, mx double"
+
     def _snap_df(self) -> DataFrame | None:
         snap = self._meta.get("snapshot")
         if snap is None:
             return None
-        return self.spark.read.parquet(os.path.join(self.path, snap))
+        return self.spark.read.schema(self._schema()).parquet(os.path.join(self.path, snap))
 
     def _partials(self, df: DataFrame) -> DataFrame:
         x = F.get_json_object(F.col("value"), f"$.{self.field}").cast("double")
@@ -126,9 +128,7 @@ class GroupedStats(FlumeView):
     def snapshot(self) -> DataFrame:
         snap = self._snap_df()
         if snap is None:
-            return self.spark.createDataFrame(
-                [], f"key {self.key_type}, n long, s double, sq double, mn double, mx double"
-            )
+            return self.spark.createDataFrame([], self._schema())
         return snap
 
     def n_groups(self) -> int:

@@ -4,10 +4,11 @@ range queries").
 
 Spark-first: state is a ``(key, seq, value)`` snapshot table holding the
 latest record per key — the ``max_by(value, seq)`` idiom (SURVEY §2.B
-V5). Each fold computes the batch's per-key latest with a native
-aggregate (map-side combine, full parallelism), merges it against the
-prior snapshot with a second ``max_by``, and writes a new snapshot dir;
-the meta points at the live snapshot so the swap is atomic.
+V5). Each fold unions the keyed batch onto the prior snapshot and runs
+ONE native ``max_by`` aggregate over both (map-side combine, full
+parallelism; ``max``/``max_by(seq)`` are associative, so this equals
+merging a pre-aggregated batch), then writes a new snapshot dir; the
+meta points at the live snapshot so the swap is atomic.
 
 At 100 TB the snapshot is hash-partitioned by key and the merge is a
 per-partition upsert (MERGE INTO on Delta); point gets prune to one
@@ -39,7 +40,6 @@ class Hashtable(FlumeView):
     encode it in ``version`` so stale snapshots rebuild.
     """
 
-    ORDER_SENSITIVE = False  # max_by/min_by(seq) are order-insensitive
     METHODS = {"get": "async", "keys": "async", "df_snapshot": "source"}
 
     def __init__(
@@ -66,11 +66,15 @@ class Hashtable(FlumeView):
     def _reset_state(self) -> None:
         self._meta["snapshot"] = None
 
+    def _schema(self) -> str:
+        return f"key {self.key_type}, seq long, value string"
+
     def _snap_df(self) -> DataFrame | None:
         snap = self._meta.get("snapshot")
         if snap is None:
             return None
-        return self.spark.read.parquet(os.path.join(self.path, snap))
+        # declared schema: no footer-inference job per fold and per get
+        return self.spark.read.schema(self._schema()).parquet(os.path.join(self.path, snap))
 
     def _batch_keys(self, batch: DataFrame) -> DataFrame:
         if self.key_expr is not None:
@@ -102,9 +106,9 @@ class Hashtable(FlumeView):
         )
 
     def fold(self, batch: DataFrame, upto: int) -> None:
-        new = self._latest(self._batch_keys(batch))
+        keyed = self._batch_keys(batch)
         prev = self._snap_df()
-        merged = self._latest(prev.unionByName(new)) if prev is not None else new
+        merged = self._latest(prev.unionByName(keyed) if prev is not None else keyed)
         snap = f"snapshot-{upto:012d}-{uuid.uuid4().hex[:8]}"
         merged.write.mode("overwrite").parquet(os.path.join(self.path, snap))
         old = self._meta.get("snapshot")
@@ -136,5 +140,5 @@ class Hashtable(FlumeView):
     def df_snapshot(self) -> DataFrame:
         snap = self._snap_df()
         if snap is None:
-            return self.spark.createDataFrame([], f"key {self.key_type}, seq long, value string")
+            return self.spark.createDataFrame([], self._schema())
         return snap

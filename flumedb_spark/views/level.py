@@ -40,7 +40,6 @@ class Level(FlumeView):
     column for the fully-JVM fast path.
     """
 
-    ORDER_SENSITIVE = False  # index maintenance is order-insensitive
     METHODS = {"get": "async", "read": "source"}
 
     def __init__(
@@ -101,9 +100,10 @@ class Level(FlumeView):
     # ---- reads ---------------------------------------------------------
     def df(self) -> DataFrame:
         files = [os.path.join(self._data_dir(), f) for f in self._meta.get("files", [])]
+        schema = f"key {self.key_type}, seq long"
         if not files:
-            return self.spark.createDataFrame([], f"key {self.key_type}, seq long")
-        return self.spark.read.parquet(*files)
+            return self.spark.createDataFrame([], schema)
+        return self.spark.read.schema(schema).parquet(*files)
 
     def _join_back(self, idx: DataFrame) -> DataFrame:
         # the filtered index side (a point get or key range) is tiny

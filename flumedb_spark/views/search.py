@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from .base import FlumeView
 
 TOKEN_PATTERN = "[^a-z0-9]+"
+POSTING_SCHEMA = "token string, seq long"
 
 
 def tokens_expr(col):
@@ -37,7 +38,6 @@ class Search(FlumeView):
     """``Search(version, text_field='text')`` — inverted token index over a
     JSON field of the log value."""
 
-    ORDER_SENSITIVE = False
     METHODS = {"query": "async", "query_df": "source"}
 
     def __init__(self, version: Any, text_field: str = "text"):
@@ -71,8 +71,8 @@ class Search(FlumeView):
     def df(self) -> DataFrame:
         files = [os.path.join(self._data_dir(), f) for f in self._meta.get("files", [])]
         if not files:
-            return self.spark.createDataFrame([], "token string, seq long")
-        return self.spark.read.parquet(*files)
+            return self.spark.createDataFrame([], POSTING_SCHEMA)
+        return self.spark.read.schema(POSTING_SCHEMA).parquet(*files)
 
     def query_df(self, terms: list[str] | str) -> DataFrame:
         """Seqs of records containing ALL terms (AND semantics).

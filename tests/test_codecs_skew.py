@@ -1,5 +1,7 @@
 """Codecs (flumecodec analog), O21 log-method passthrough, skew utils."""
 
+import functools
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -26,17 +28,31 @@ def test_binary_codec_roundtrip(spark, tmp_log_dir):
     db.close()
 
 
+def concat(acc, item):
+    return (acc or "") + item
+
+
 def test_raw_codec_with_mapper_and_view(spark, tmp_log_dir):
-    # mapper + reduce run through the codec, not hardcoded JSON
+    # mapper + reduce run through the codec, not hardcoded JSON. The
+    # concat folds are order-sensitive and a view's feed is an unsorted
+    # scan: the first catch-up spans four log files of growing size (the
+    # scan plans bigger files first), so only the views' own seq sort,
+    # sequential or with a combiner, reproduces the left fold
     db = Flume(
         ParquetLog(tmp_log_dir, codec="raw"),
         mapper=lambda s: s.upper(),
         spark=spark,
     )
-    db.use("concat", Reduce(1, lambda acc, item: (acc or "") + item))
-    db.append(["a", "b"])
+    db.use("concat", Reduce(1, concat))
+    db.use("concat_par", Reduce(1, concat, combiner=lambda a, b: a + b))
+    batches = [list("ab"), list("cdefg"), list("hijklmnopq"), list("rstuvwxyz0123456789")]
+    for b in batches:
+        db.append(b)
+    assert len(db.log._load_meta()["files"]) == len(batches)
     assert db.get(0) == "A"
-    assert db.concat.get() == "AB"
+    want = functools.reduce(concat, [x.upper() for b in batches for x in b], None)
+    assert db.concat.get() == want
+    assert db.concat_par.get() == want
     db.close()
 
 

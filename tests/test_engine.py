@@ -508,3 +508,35 @@ def test_decryption_mapper_rebuild_scenario(spark, tmp_log_dir):
     raw = db.log.get(spark, 1)
     assert raw["value"]["blob"] == "dlrow"
     db.close()
+
+
+def test_gated_read_job_budget(spark, tmp_log_dir):
+    # a read-your-writes read after a small append is a catch-up fold
+    # plus a state read: its Spark jobs are the engine's fixed per-read
+    # cost. No global sort on the feed, no schema-inference job on the
+    # snapshot read and one merge aggregate keep it at five.
+    from flumedb_spark.views.hashtable import Hashtable
+
+    user = "get_json_object(value, '$.user')"
+    db = make_db(tmp_log_dir, spark)
+    db.append([{"user": f"u{i % 7}", "v": i} for i in range(100)])
+    db.use("stats", NativeStats(1, field="v"))
+    db.use("latest", Hashtable(1, key_expr=user))
+    db.stats.ready()
+    db.latest.ready()
+    batch = [{"user": f"u{i % 7}", "v": 100 + i} for i in range(100)]
+    db.append(batch)
+
+    sc = spark.sparkContext
+    group = "gated-read-job-budget"
+    sc.setJobGroup(group, "gated read job budget")
+    try:
+        got = db.latest.get(batch[-1]["user"])
+        stats = db.stats.get()
+    finally:
+        sc.setJobGroup(None, None)
+    assert got == batch[-1]
+    assert stats["count"] == 200 and stats["sum"] == sum(range(200))
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 5, f"gated read ran {len(jobs)} Spark jobs"
+    db.close()

@@ -64,11 +64,27 @@ def test_level_incremental_and_rebuild(db):
 
 def test_hashtable_latest_per_key(db):
     db.use("latest", Hashtable(1, key_expr="get_json_object(value, '$.author')"))
+    db.use("by_likes", Hashtable(1, key_expr="get_json_object(value, '$.likes')", key_type="int"))
     assert db.latest.get("alice")["likes"] == 7  # seq 2 beats seq 0
+    assert db.by_likes.get(10)["author"] == "carol"  # seq 3 beats seq 1
     db.append({"author": "alice", "tags": [], "text": "new", "likes": 99})
     assert db.latest.get("alice")["likes"] == 99
     assert db.latest.get("missing") is None
     assert db.latest.keys() == ["alice", "bob", "carol"]
+    # one fold batch holding snapshot keys several times: the single
+    # merge aggregate over snapshot + batch keeps each key's top seq
+    db.append(
+        [
+            {"author": "bob", "text": "b1", "likes": 10},
+            {"author": "alice", "text": "a1", "likes": 5},
+            {"author": "bob", "text": "b2", "likes": 10},
+        ]
+    )
+    assert db.latest.get("bob")["text"] == "b2"
+    assert db.latest.get("alice")["text"] == "a1"
+    assert db.by_likes.get(10)["text"] == "b2"
+    assert db.by_likes.keys() == [3, 5, 7, 10, 99]  # declared int keys sort numerically
+    assert db.by_likes.df_snapshot().schema["key"].dataType.simpleString() == "int"
 
 
 def test_hashtable_key_fn(db):
@@ -271,9 +287,28 @@ def test_hashtable_first_writer_wins(db):
     db.use("first", Hashtable("f1", key_expr="get_json_object(value, '$.author')", keep="first"))
     assert db.first.get("alice")["likes"] == 3  # seq 0, not seq 2
     assert db.first.get("bob")["likes"] == 10
+    db.use(
+        "first_likes",
+        Hashtable("f1", key_expr="get_json_object(value, '$.likes')", key_type="bigint", keep="first"),
+    )
+    assert db.first_likes.get(10)["author"] == "bob"  # seq 1, not seq 3
     # later duplicates never displace the original...
     db.append({"author": "alice", "likes": 99})
     assert db.first.get("alice")["likes"] == 3
+    # ...not even several in one fold batch, and a key new to the
+    # snapshot keeps its lowest seq within the batch
+    db.append(
+        [
+            {"author": "dan", "text": "d1", "likes": 10},
+            {"author": "alice", "text": "a1", "likes": 4},
+            {"author": "dan", "text": "d2", "likes": 4},
+        ]
+    )
+    assert db.first.get("alice")["likes"] == 3
+    assert db.first.get("dan")["text"] == "d1"
+    assert db.first_likes.get(10)["author"] == "bob"
+    assert db.first_likes.get(4)["text"] == "a1"
+    assert db.first_likes.df_snapshot().schema["key"].dataType.simpleString() == "bigint"
     # ...and incremental state == a cold rebuild over the same log
     snap = {(r.key, r.seq) for r in db.first.df_snapshot().collect()}
     db.rebuild()
